@@ -96,6 +96,108 @@ def cross_moments(
     }
 
 
+def _index_groups(df: DataFrame, hits: list, aggs: list) -> dict:
+    """Wide statistics from ONE aggregation: every row is emitted under
+    index -1 and under each i whose ``hits[i]`` holds, then grouped by
+    index. Returns {index: Row} with ``__n`` (rows in the group) and
+    ``__a{j}`` per aggregate of ``aggs``; an index that no row hit has no
+    entry. The plan holds 1+len(aggs) aggregates however many hit columns
+    there are, instead of one aggregate per (hit, value) pair."""
+    idx = F.array(F.lit(-1), *[F.when(h, F.lit(i)) for i, h in enumerate(hits)])
+    rows = (
+        df.select(F.explode(F.filter(idx, lambda i: i.isNotNull())).alias("__i"), "*")
+        .groupBy("__i")
+        .agg(
+            F.count(F.lit(1)).alias("__n"),
+            *[a.alias(f"__a{j}") for j, a in enumerate(aggs)],
+        )
+        .collect()
+    )
+    return {r["__i"]: r for r in rows}
+
+
+def _group_vector(groups: dict, i: int, k: int) -> np.ndarray:
+    """Group i's first k aggregates as doubles. An absent group, or a NULL
+    sum (no non-null value), is 0."""
+    r = groups.get(i)
+    if r is None:
+        return np.zeros(k)
+    return np.array([float(r[f"__a{j}"] or 0.0) for j in range(k)])
+
+
+def binary_cross_moments(df: DataFrame, cols: list[str]) -> dict:
+    """``cross_moments(df, cols, cols)`` for 0/1 columns (NULLs allowed)
+    from one ``_index_groups`` pass over the positive-column index: 2+C
+    aggregates where cross_moments plans 1+2C+C^2.
+
+    Group -1 holds every row: n and the positive counts (sum_x; for 0/1
+    values sumsq_x is the same vector). Group i holds the rows with
+    cols[i] == 1, so its positive counts are row i of the co-occurrence
+    matrix sum_xy. Every value is an integer count and equals the
+    cross_moments value bit for bit; the one difference is a pair never
+    jointly non-null, which is NaN there and 0 here.
+
+    Raises ValueError if a column holds anything but 0, 1 or NULL. The
+    check is one more aggregate of the same pass, not another job.
+    """
+    cols = list(cols)
+    ds = [F.col(c).cast("double") for c in cols]
+    ones = [d == 1.0 for d in ds]
+    # per row: the index of its first non-binary column, NULL if none
+    first_bad = F.coalesce(*[F.when(~d.isin(0.0, 1.0), F.lit(i)) for i, d in enumerate(ds)])
+    c = len(cols)
+    groups = _index_groups(
+        df, ones, [F.count(F.when(o, True)) for o in ones] + [F.min(first_bad)]
+    )
+    everyone = groups.get(-1)
+    if everyone is not None and everyone[f"__a{c}"] is not None:
+        raise ValueError(
+            f"binary_cross_moments: column {cols[everyone[f'__a{c}']]!r} "
+            "holds a value other than 0, 1 or NULL"
+        )
+    sum_x = _group_vector(groups, -1, c)
+    return {
+        "n": everyone["__n"] if everyone is not None else 0,
+        "xs": cols,
+        "ys": cols,
+        "sum_x": sum_x,
+        "sumsq_x": sum_x.copy(),
+        "sum_y": sum_x.copy(),
+        "sumsq_y": sum_x.copy(),
+        "sum_xy": np.array([_group_vector(groups, i, c) for i in range(c)]).reshape(c, c),
+    }
+
+
+def null_indicator_sums(df: DataFrame, features: list[str], targets: list[str]) -> dict:
+    """Sufficient statistics of the missing-indicator screen from one
+    ``_index_groups`` pass over the null-feature index: 1+T aggregates
+    where one aggregate per (feature, target) pair plans 1+F+F*T+T.
+
+    Returns n (rows), ind[f] = rows with f NULL, y[t] = sum of t and
+    iy[f, t] = sum(isnull(f) * t), as numpy arrays over features/targets.
+    Targets are cast to double; a sum with no non-null value is 0, so an
+    empty input gives n = 0 and all-zero sums.
+    """
+    k = len(targets)
+    groups = _index_groups(
+        df,
+        [F.col(f).isNull() for f in features],
+        [F.sum(F.col(t).cast("double")) for t in targets],
+    )
+
+    def rows(i: int) -> int:
+        return groups[i]["__n"] if i in groups else 0
+
+    return {
+        "n": rows(-1),
+        "ind": np.array([float(rows(i)) for i in range(len(features))]),
+        "y": _group_vector(groups, -1, k),
+        "iy": np.array([_group_vector(groups, i, k) for i in range(len(features))]).reshape(
+            len(features), k
+        ),
+    }
+
+
 def corr_from_moments(m: dict, eps: float = 1e-12) -> pd.DataFrame:
     """Pearson correlation matrix (xs rows x ys cols) from cross_moments.
 
@@ -209,103 +311,94 @@ def auc_by_rank(
     """Exact Mann-Whitney ROC AUC with average-rank tie handling (operator
     E7; ref `_safe_auc`, public_eda_pipeline.py:33-39).
 
-    Scale design — two-pass partitioned prefix sum, no unpartitioned
-    window anywhere:
+    Scale design — partitioned prefix sum over distinct scores, then a
+    constant-size cross-bucket pass:
 
     1. Reduce to one row per *distinct score* with positive/negative
        counts (a hash aggregation).
     2. Range-bucket the distinct scores into `num_buckets` equal-width
-       bins of [min, max] (min/max arrive via a broadcast one-row join —
-       no driver action, the plan stays lazy). Nulls sort first →
-       bucket -1; NaN sorts last in Spark → bucket `num_buckets`.
+       bins of [min, max] of the finite raw scores (a one-row aggregate
+       of the input, broadcast-joined — no driver action, the plan stays
+       lazy). Sentinel buckets keep Spark's sort order: null → -2,
+       -inf → -1, +inf → `num_buckets`, NaN → `num_buckets + 1`.
     3. Cumulative negatives *within* each bucket: a window PARTITIONED BY
        bucket (each partition holds ~1/num_buckets of the distinct
-       scores; a continuous score at 100× data no longer collapses onto
+       scores; a continuous score at 100× data does not collapse onto
        one task).
-    4. Cross-bucket offsets: per-bucket totals (≤ num_buckets+2 rows) get
-       their exclusive prefix sum via a broadcast triangular self-join —
-       O(num_buckets²) work on a constant-size table, window-free.
-    5. cum_neg_below = offset[bucket] + within-bucket cumulative.
+    4. Reduce to one row per bucket (at most num_buckets+4 rows):
+       C_b = sum_s pos_s * (cum_in_bucket_s + 0.5*neg_s), P_b = sum pos,
+       N_b = sum neg.
+    5. Over that constant-size table, the exclusive prefix
+       O_b = sum_{b' < b} N_b' (the only unpartitioned window) and
+       AUC = [sum_b (C_b + P_b * O_b)] / (P*N).
 
-    Exactness: pos/neg are integral-valued doubles, and integer sums in
-    IEEE doubles are associativity-exact below 2^53, so the split
-    accumulation is bit-identical to the old single-window plan.
-    AUC = [sum_s pos_s * (cum_neg_below_s + 0.5*neg_s)] / (P*N).
+    Exactness: pos/neg are integral-valued doubles, so every term above
+    is integral or half-integral, and such sums in IEEE doubles are
+    associativity-exact below 2^52: the split accumulation equals the
+    single-window sum over all distinct scores bit for bit.
     Degenerate single-class input yields NULL (the reference's guard).
 
     Returns a 1-row DataFrame: auc double.
     """
-    g = (
-        df.select(
-            F.col(score_col).cast("double").alias("s"),
-            F.col(label_col).cast("double").alias("y"),
-        )
-        .groupBy("s")
-        .agg(F.sum("y").alias("pos"), F.sum(1 - F.col("y")).alias("neg"))
+    scored = df.select(
+        F.col(score_col).cast("double").alias("s"),
+        F.col(label_col).cast("double").alias("y"),
+    )
+    g = scored.groupBy("s").agg(
+        F.sum("y").alias("pos"), F.sum(1 - F.col("y")).alias("neg")
     )
     # Range over FINITE scores only: an infinity in min/max would make
     # `width` infinite and collapse every finite score into bucket 0 —
     # still correct (within-bucket order holds) but single-partition.
-    # Infinities get their own sentinel buckets respecting Spark sort
-    # order (null < -inf < finite < +inf < NaN).
     inf, ninf = F.lit(float("inf")), F.lit(float("-inf"))
-    rng = g.where(
+    rng = scored.where(
         F.col("s").isNotNull()
         & ~F.isnan("s")
         & (F.col("s") != inf)
         & (F.col("s") != ninf)
     ).agg(F.min("s").alias("_lo"), F.max("s").alias("_hi"))
     width = (F.col("_hi") - F.col("_lo")) / num_buckets
-    gb = (
-        g.join(F.broadcast(rng))
-        .withColumn(
-            "bucket",
-            F.when(F.col("s").isNull(), F.lit(-2))
-            .when(F.isnan("s"), F.lit(num_buckets + 1))
-            .when(F.col("s") == ninf, F.lit(-1))
-            .when(F.col("s") == inf, F.lit(num_buckets))
-            .when(
-                (F.col("_hi") == F.col("_lo")) | F.col("_hi").isNull(),
-                F.lit(0),
-            )
-            .otherwise(
-                F.least(
-                    F.lit(num_buckets - 1),
-                    F.floor((F.col("s") - F.col("_lo")) / width).cast("int"),
-                )
-            ),
+    gb = g.join(F.broadcast(rng)).withColumn(
+        "bucket",
+        F.when(F.col("s").isNull(), F.lit(-2))
+        .when(F.isnan("s"), F.lit(num_buckets + 1))
+        .when(F.col("s") == ninf, F.lit(-1))
+        .when(F.col("s") == inf, F.lit(num_buckets))
+        .when(
+            (F.col("_hi") == F.col("_lo")) | F.col("_hi").isNull(),
+            F.lit(0),
         )
-        .drop("_lo", "_hi")
+        .otherwise(
+            F.least(
+                F.lit(num_buckets - 1),
+                F.floor((F.col("s") - F.col("_lo")) / width).cast("int"),
+            )
+        ),
     )
     w = (
         Window.partitionBy("bucket")
         .orderBy("s")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    gb = gb.withColumn(
-        "cum_in_bucket", F.coalesce(F.sum("neg").over(w), F.lit(0.0))
-    )
-    totals = gb.groupBy("bucket").agg(F.sum("neg").alias("_bneg"))
-    offsets = (
-        totals.alias("a")
-        .join(
-            F.broadcast(totals.select(
-                F.col("bucket").alias("_b2"), F.col("_bneg").alias("_bneg2")
-            )),
-            F.col("_b2") < F.col("bucket"),
-            "left",
-        )
+    per_bucket = (
+        gb.withColumn("cum_in_bucket", F.coalesce(F.sum("neg").over(w), F.lit(0.0)))
         .groupBy("bucket")
-        .agg(F.coalesce(F.sum("_bneg2"), F.lit(0.0)).alias("_offset"))
+        .agg(
+            F.sum(
+                F.col("pos") * (F.col("cum_in_bucket") + 0.5 * F.col("neg"))
+            ).alias("_c"),
+            F.sum("pos").alias("_p"),
+            F.sum("neg").alias("_n"),
+        )
     )
-    gb = gb.join(F.broadcast(offsets), "bucket", "left").withColumn(
-        "cum_neg_below", F.coalesce("_offset", F.lit(0.0)) + F.col("cum_in_bucket")
-    )
-    return gb.agg(
+    below = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
+    return per_bucket.withColumn(
+        "_offset", F.coalesce(F.sum("_n").over(below), F.lit(0.0))
+    ).agg(
         F.when(
-            (F.sum("pos") > 0) & (F.sum("neg") > 0),
-            F.sum(F.col("pos") * (F.col("cum_neg_below") + 0.5 * F.col("neg")))
-            / (F.sum("pos") * F.sum("neg")),
+            (F.sum("_p") > 0) & (F.sum("_n") > 0),
+            F.sum(F.col("_c") + F.col("_p") * F.col("_offset"))
+            / (F.sum("_p") * F.sum("_n")),
         ).alias("auc")
     )
 

@@ -183,9 +183,10 @@ def run_pipeline(
     save(sum_dist, "opened_targets_distribution.csv")
 
     tick("opened_histogram")
-    # ---- target dependencies (ref 140-181): ONE moments pass gives the
-    # corr matrix AND co-occurrence counts AND prevalences ----
-    m = S.cross_moments(train_target, target_cols, target_cols)
+    # ---- target dependencies (ref 140-181): ONE grouped pass over the
+    # positive-target index gives the corr matrix AND co-occurrence counts
+    # AND prevalences ----
+    m = S.binary_cross_moments(train_target, target_cols)
     corr = S.corr_from_moments(m)
     save(corr, "target_correlation_matrix.csv", index=True)
 
@@ -380,7 +381,8 @@ def run_pipeline(
     tick("filled_count")
     # ---- missing-indicator AUC screen (ref 321-364): closed-form AUC for
     # a binary score — AUC = 0.5 + (P(ind|pos) - P(ind|neg))/2 — so the
-    # whole screen is ONE chunked conditional-agg pass, no per-pair jobs ----
+    # whole screen is ONE grouped pass over the null-feature index, no
+    # per-pair jobs ----
     pop_targets = (
         target_df[target_df["target"] != cfg.antagonist]
         .head(cfg.n_popular_targets)["target"]
@@ -404,33 +406,23 @@ def run_pipeline(
             on=id_col,
             how="inner",
         )
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for f in moderate_feats:
-            ind = F.col(f).isNull().cast("double")
-            aggs.append(F.sum(ind).alias(f"ind_{f}"))
-            for t in pop_targets:
-                y = F.col(t).cast("double")
-                aggs.append(F.sum(ind * y).alias(f"iy_{f}_{t}"))
-        for t in pop_targets:
-            aggs.append(F.sum(F.col(t).cast("double")).alias(f"y_{t}"))
-        row = {}
-        for batch in [aggs[i : i + 1000] for i in range(0, len(aggs), 1000)]:
-            row.update(sample.agg(*batch).collect()[0].asDict())
-        n_s = row["__n"]
+        sums = S.null_indicator_sums(sample, moderate_feats, pop_targets)
+        n_s = sums["n"]
         null_rate_map = dict(zip(extra_miss_df["feature"], extra_miss_df["null_rate"]))
-        for f in moderate_feats:
-            ind_sum = float(row[f"ind_{f}"])
+        for fi, f in enumerate(moderate_feats):
+            ind_sum = float(sums["ind"][fi])
             if ind_sum == 0 or ind_sum == n_s:
                 continue  # constant indicator (ref line 348-349)
             miss_rate = ind_sum / n_s
-            for t in pop_targets:
-                pos = float(row[f"y_{t}"])
+            for ti, t in enumerate(pop_targets):
+                pos = float(sums["y"][ti])
                 neg = n_s - pos
                 if pos == 0 or neg == 0:
                     auc = np.nan  # degenerate class guard (ref safe_auc)
                 else:
-                    a = float(row[f"iy_{f}_{t}"]) / pos
-                    b = (ind_sum - float(row[f"iy_{f}_{t}"])) / neg
+                    iy = float(sums["iy"][fi, ti])
+                    a = iy / pos
+                    b = (ind_sum - iy) / neg
                     auc = 0.5 + (a - b) / 2.0
                 auc_eff = np.nan if not np.isfinite(auc) else max(auc, 1.0 - auc)
                 miss_auc_rows.append(

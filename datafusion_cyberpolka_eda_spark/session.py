@@ -14,6 +14,27 @@ import os
 from pyspark.sql import SparkSession
 
 
+# JIT code cache: the default -XX:ReservedCodeCacheSize (240 MB,
+# segmented ~116 MB per nmethod heap on JDK 17) is too small for a JVM that
+# JITs thousands of whole-stage-codegen classes — measured: HALF the
+# registry fills the non-profiled segment to 89/116 MB, and a full-registry
+# bench session overflows it mid-run, at which point the sweeper flushes hot
+# nmethods and the code-heavy entries step +16-19% slower (pass totals
+# 244.0 -> 268.5/272.8 concentrated in the registry's second half, flat on a
+# half-registry probe that stays under the limit). Same math on any
+# long-running many-query driver or executor JVM; 512 MB holds the whole
+# registry's JIT output.
+JVM_OPTS = "-XX:ReservedCodeCacheSize=512m"
+
+
+def driver_java_opts() -> str:
+    """JVM_OPTS followed by $SPARK_GRAFT_DRIVER_JAVA_OPTS, if set. HotSpot
+    keeps the last value of a repeated -XX flag, so the variable adds
+    options and can still override the code cache size."""
+    extra = os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "").strip()
+    return f"{JVM_OPTS} {extra}" if extra else JVM_OPTS
+
+
 def get_spark(
     app_name: str = "cyberpolka_eda_spark",
     master: str | None = None,
@@ -59,25 +80,23 @@ def get_spark(
             "spark.cleaner.periodicGC.interval",
             os.environ.get("SPARK_GRAFT_PERIODIC_GC", "10min"),
         )
-        # JIT code cache (r13): the default -XX:ReservedCodeCacheSize
-        # (240 MB, segmented ~116 MB per nmethod heap on JDK 17) is too
-        # small for a JVM that JITs thousands of whole-stage-codegen
-        # classes — measured: HALF the registry fills the non-profiled
-        # segment to 89/116 MB, and a full-registry bench session
-        # overflows it mid-run, at which point the sweeper flushes hot
-        # nmethods and the code-heavy entries step +16-19% slower
-        # (pass totals 244.0 -> 268.5/272.8 concentrated in the
-        # registry's second half, flat on a half-registry probe that
-        # stays under the limit). Same math on any long-running
-        # many-query driver or executor JVM; 512 MB holds the whole
-        # registry's JIT output. Env-tunable for cluster profiles.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "SPARK_GRAFT_DRIVER_JAVA_OPTS",
-                "-XX:ReservedCodeCacheSize=512m",
-            ),
-        )
+        # JIT code cache: see JVM_OPTS. Driver and executors get the
+        # same option; in local mode the executor is the driver JVM.
+        .config("spark.driver.extraJavaOptions", driver_java_opts())
+        .config("spark.executor.extraJavaOptions", JVM_OPTS)
+        # Call-site capture off. With it on (the PySpark 4.1 default) every
+        # Column/DataFrame API call stores the caller's file:line in the JVM
+        # before it runs: a Python stack walk, a failed `import IPython`
+        # and ~7 py4j round trips (conf read, origin set/clear). On the
+        # 2,000-row EDA pipeline that is most of the driver's round trips:
+        # a warm pass drops from ~57k to ~17k of them (4-vCPU VM,
+        # local[4]). What errors lose is the Python file:line of the failing
+        # Column call in their "== DataFrame ==" query context, which names
+        # a py4j reflection frame instead; the exception class and message
+        # are unchanged. Pass
+        # extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}
+        # to get it back while debugging.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # whole-stage-codegen class cache (static conf, default 100):
         # a 240-entry registry generates several codegen units per query,
         # so one full pass evicts the default cache completely and EVERY

@@ -100,6 +100,87 @@ class TestMomentsEngine:
         )
 
 
+class TestExplodedIndexSums:
+    """binary_cross_moments and null_indicator_sums take one groupBy over an
+    exploded index; their integer sums must equal the per-pair aggregates
+    they replace exactly."""
+
+    @staticmethod
+    def _binary(spark):
+        rng = np.random.default_rng(3)
+        rows = []
+        for _ in range(400):
+            vals = [int(rng.random() < p) for p in (0.3, 0.1, 0.6)]
+            rows.append(
+                tuple(None if rng.random() < 0.1 else v for v in vals) + (0,)
+            )
+        # t_zero has no positive row: its index group never exists
+        return spark.createDataFrame(rows, "t_a int, t_b int, t_c int, t_zero int")
+
+    def test_binary_cross_moments_equal_cross_moments(self, spark):
+        df = self._binary(spark)
+        cols = df.columns
+        got = S.binary_cross_moments(df, cols)
+        ref = S.cross_moments(df, cols, cols)
+        assert got["n"] == ref["n"] == 400
+        assert got["xs"] == ref["xs"] and got["ys"] == ref["ys"]
+        for k in ("sum_x", "sumsq_x", "sum_y", "sumsq_y", "sum_xy"):
+            assert got[k].shape == ref[k].shape, k
+            assert np.array_equal(got[k], ref[k]), k
+
+    def test_binary_cross_moments_reject_non_binary(self, spark):
+        df = spark.createDataFrame(
+            [(1, 0.0), (0, 2.0), (None, 1.0)], "t_ok int, t_bad double"
+        )
+        with pytest.raises(ValueError, match="'t_bad'"):
+            S.binary_cross_moments(df, ["t_ok", "t_bad"])
+
+    @staticmethod
+    def _per_pair(df, features, targets) -> dict:
+        """The aggregate the screen used to plan: one sum per pair."""
+        ind = {f: F.col(f).isNull().cast("double") for f in features}
+        y = {t: F.col(t).cast("double") for t in targets}
+        row = df.agg(
+            F.count(F.lit(1)).alias("n"),
+            *[F.sum(ind[f]).alias(f"ind_{f}") for f in features],
+            *[F.sum(ind[f] * y[t]).alias(f"iy_{f}_{t}") for f in features for t in targets],
+            *[F.sum(y[t]).alias(f"y_{t}") for t in targets],
+        ).collect()[0]
+        # a SQL sum over no rows is NULL; the screen reads it as 0
+        val = lambda k: float(row[k] or 0.0)  # noqa: E731
+        return {
+            "n": row["n"],
+            "ind": np.array([val(f"ind_{f}") for f in features]),
+            "iy": np.array([[val(f"iy_{f}_{t}") for t in targets] for f in features]),
+            "y": np.array([val(f"y_{t}") for t in targets]),
+        }
+
+    def test_null_indicator_sums_equal_per_pair(self, spark):
+        rng = np.random.default_rng(5)
+        rows = [
+            (
+                None if rng.random() < 0.4 else float(i),  # some nulls
+                float(i),  # no nulls
+                None,  # all nulls
+                int(rng.random() < 0.3),
+                None if i % 50 == 0 else int(rng.random() < 0.6),
+            )
+            for i in range(300)
+        ]
+        df = spark.createDataFrame(
+            rows, "f_some double, f_none double, f_all double, t1 int, t2 int"
+        )
+        features, targets = ["f_some", "f_none", "f_all"], ["t1", "t2"]
+        for d in (df, df.where(F.lit(False))):  # and an empty sample
+            got = S.null_indicator_sums(d, features, targets)
+            ref = self._per_pair(d, features, targets)
+            assert got["n"] == ref["n"]
+            for k in ("ind", "iy", "y"):
+                assert got[k].shape == ref[k].shape, k
+                assert np.array_equal(got[k], ref[k]), k
+        assert S.null_indicator_sums(df.where(F.lit(False)), features, targets)["n"] == 0
+
+
 class TestAucByRank:
     def test_matches_naive_pairwise(self, spark):
         rng = np.random.default_rng(7)
@@ -153,13 +234,61 @@ class TestAucByRank:
         assert S.auc_by_rank(df, "y", "s").collect()[0]["auc"] == 0.5
 
     def test_no_unpartitioned_window_in_plan(self, spark):
+        # every window over per-score rows is PARTITION BY bucket; the one
+        # unpartitioned window reads the per-bucket aggregate (<= 260 rows)
         df = spark.range(0, 1000).select(
             (F.col("id") % 2).alias("y"), (F.rand(5)).alias("s")
         )
-        plan = S.auc_by_rank(df, "y", "s")._jdf.queryExecution().executedPlan().toString()
-        for line in plan.splitlines():
-            if "Window" in line and "windowspecdefinition" in line:
-                assert "bucket" in line, f"unpartitioned window: {line}"
+        plan = S.auc_by_rank(df, "y", "s")._jdf.queryExecution().executedPlan()
+        windows = _windows_and_their_input(plan)
+        assert sorted(windows) == [([], ["bucket"]), (["bucket"], ["s"])], windows
+
+    def test_collect_job_count(self, spark):
+        rng = np.random.default_rng(17)
+        df = spark.createDataFrame(
+            pd.DataFrame({"y": (rng.random(2000) < 0.4).astype(int), "s": rng.normal(0, 1, 2000)})
+        )
+        dag = spark.sparkContext._jsc.sc().dagScheduler()
+        before = int(dag.nextJobId())
+        S.auc_by_rank(df, "y", "s").collect()
+        assert int(dag.nextJobId()) - before <= 8
+
+
+def _windows_and_their_input(plan) -> list[tuple[list[str], list[str]]]:
+    """(partition columns, grouping columns of the first HashAggregate
+    below it) for every Window node of a physical plan. The first
+    aggregate below a window tells what one of its input rows is."""
+
+    def children(node) -> list:
+        if node.nodeName() == "AdaptiveSparkPlan":
+            return [node.executedPlan()]
+        seq = node.children()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    def names(exprs) -> list[str]:
+        # attribute references print as name#exprId
+        return [exprs.apply(i).toString().split("#")[0] for i in range(exprs.size())]
+
+    def first_agg_keys(node):
+        for c in children(node):
+            if c.nodeName() == "HashAggregate":
+                keys = c.groupingExpressions()
+                return [keys.apply(i).name() for i in range(keys.size())]
+            keys = first_agg_keys(c)
+            if keys is not None:
+                return keys
+        return None
+
+    found = []
+
+    def walk(node) -> None:
+        if node.nodeName() == "Window":
+            found.append((names(node.partitionSpec()), first_agg_keys(node)))
+        for c in children(node):
+            walk(c)
+
+    walk(plan)
+    return found
 
 
 class TestHashSampler:

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -189,13 +190,23 @@ def main() -> int:
     )
     check("g1_g2_topk_global", contains=["TakeOrderedAndProject"], absent=["Exchange"])
     check("e7_auc_by_rank", absent=["CartesianProduct"])
-    # e7's cumulative sums must all run under PARTITIONED windows (the
-    # round-2 scale-killer was a global Window.orderBy that collapses a
-    # continuous-score table onto one task)
+    # e7's cumulative sums over distinct scores must run under windows
+    # PARTITIONED BY bucket (a global Window.orderBy collapses a
+    # continuous-score table onto one task). Its one unpartitioned
+    # window is the cross-bucket prefix over the per-bucket table
+    # (<= num_buckets+4 rows), a sum of `_n`.
     p = plan_of(qs["e7_auc_by_rank"](spark, sf_dir))
+    unpartitioned = []
     for line in p.splitlines():
-        if "windowspecdefinition" in line and "bucket" not in line:
-            failures.append(f"e7_auc_by_rank: unpartitioned window: {line.strip()}")
+        spec = re.search(r"windowspecdefinition\(([^,]*)", line)
+        if spec is None:
+            continue
+        if " ASC" in spec.group(1) or " DESC" in spec.group(1):
+            unpartitioned.append(line.strip())
+        elif not spec.group(1).startswith("bucket#"):
+            failures.append(f"e7_auc_by_rank: window not partitioned by bucket: {line.strip()}")
+    if len(unpartitioned) != 1 or "sum(_n#" not in unpartitioned[0]:
+        failures.append(f"e7_auc_by_rank: unpartitioned windows: {unpartitioned}")
     print(f"[{'OK' if not failures else '??'}] e7_auc_by_rank window partitioning")
     check("j3_sessionize", absent=["CartesianProduct"])
     # brute-force similarity deliberately broadcasts the tiny query side
